@@ -6,9 +6,10 @@ The reference speaks the native PG wire protocol single-threaded
 artifact the runtime may simply not have (this sandbox: PostgreSQL server
 present, ``org.postgresql`` jar absent and unfetchable). This module is the
 fallback transport with the SAME read API: each Spark partition shells out
-to ``psql`` and streams ``COPY (SELECT ...) TO STDOUT (FORMAT csv)`` — the
-fastest bulk-export path PostgreSQL has (the reference's own export loop is
-a COPY-shaped row stream for the same reason).
+to ``psql`` and streams ``COPY (SELECT ...) TO STDOUT (FORMAT csv,
+FORCE_QUOTE *)`` — the fastest bulk-export path PostgreSQL has (the
+reference's own export loop is a COPY-shaped row stream for the same
+reason).
 
 Scale design:
 - **Partitioned reads** mirror the JDBC splitter: ``partition_column`` +
@@ -16,18 +17,29 @@ Scale design:
   queries, one per Spark task, so N executors hold N server-side COPY
   streams in parallel. Same skew caveat as JDBC's splitter: ranges are
   uniform in key space, not row count.
-- **Python stays thin**: the worker parses CSV into an all-text pandas
-  frame (Arrow-batched back to the JVM); every typed cast happens
-  Spark-side in codegen'd Column expressions (`_cast_plan`), not in Python.
-- **NULL fidelity**: COPY's ``NULL`` marker is set to a sentinel no real
-  corpus value should equal (``__PG_NULL__``); PostgreSQL CSV-quotes any
-  data value that collides with the marker, but pandas cannot see the
-  quoting difference, so a column whose DATA contains the literal sentinel
-  would mis-read as NULL — documented limit, pick a different sentinel via
-  ``null_marker=`` if your data is adversarial.
-- **Executor prerequisite**: ``psql`` must be on PATH on every executor
-  (it is on any PG client image); connection parameters travel in the
-  compiled command line, password via PGPASSWORD in the executor env.
+- **Python stays thin**: each task runs one range's COPY and hands psql's
+  stdout bytes to ``pyarrow.csv``, which parses them into all-string Arrow
+  batches returned through ``mapInArrow`` — no pandas, no per-row Python.
+  Every typed cast happens Spark-side in codegen'd Column expressions
+  (`_cast_plan`), not in Python.
+- **Exact NULLs**: COPY runs with ``FORCE_QUOTE *``, so every non-NULL value
+  (``''`` included) arrives quoted and NULL is the only unquoted empty
+  field. The parser maps exactly those fields to NULL
+  (``quoted_strings_can_be_null=False``), so any string round-trips — no
+  sentinel, no reserved value. ``PGCLIENTENCODING=UTF8`` fixes the wire
+  encoding whatever the executor's locale.
+- **Row size bound**: the parser reads the stream in 64 MiB blocks
+  (``_BLOCK_BYTES``) and needs each row to end in the block after the one
+  it starts in, so any row up to 64 MiB of CSV text reads — a ``bytea``
+  cast to hex doubles in size, so up to ~32 MiB of binary per row. A
+  larger row fails with the parser's error. A task reading a range that
+  large holds a few blocks in memory.
+- **Executor prerequisites**: ``psql`` must be on PATH on every executor
+  (it is on any PG client image), and ``pg2parquet_spark`` must be
+  importable there (installed, on PYTHONPATH, or shipped with the job):
+  the task function calls this module's COPY reader by reference.
+  Connection parameters travel in the compiled command line, password via
+  PGPASSWORD in the executor env.
 
 Exotic types compose exactly as with JDBC: run the A3 catalog probe
 (:data:`~pg2parquet_spark.sources.jdbc.ENUM_LABELS_SQL` etc.) through
@@ -38,11 +50,11 @@ casts), read it here, and rebuild structure with the typemap parsers.
 
 from __future__ import annotations
 
-import csv
-import io
 import os
 import shutil
 import subprocess
+import tempfile
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,11 +63,13 @@ from pyspark.sql import types as T
 
 from pg2parquet_spark.sources.jdbc import PostgresConnection, quote_ident
 
-NULL_MARKER = "__PG_NULL__"
-# rows per pandas chunk on the streaming partition pipe: 50k rows of a
-# ~40-col text frame is a few tens of MiB — the executor-memory bound the
-# streaming read guarantees regardless of how hot a range turns out to be
-_COPY_CHUNK_ROWS = 50_000
+# a query's target list holds at most this many columns (PostgreSQL's
+# MaxTupleAttributeNumber): header-less reads of unknown width type every
+# autogenerated column name up to it as string
+_PG_MAX_COLUMNS = 1664
+
+# the CSV parser's read size, which bounds the row size (module docstring)
+_BLOCK_BYTES = 64 << 20
 
 
 @dataclass(frozen=True)
@@ -81,7 +95,7 @@ class PsqlTarget:
         ]
 
     def env(self) -> dict[str, str]:
-        env = dict(os.environ)
+        env = dict(os.environ, PGCLIENTENCODING="UTF8")
         if self.password:
             env["PGPASSWORD"] = self.password
         return env
@@ -125,23 +139,91 @@ def resolve_target(conn: PostgresConnection) -> PsqlTarget:
     )
 
 
-def _copy_stdout(target: PsqlTarget, sql: str, null_marker: str) -> str:
-    """Run one server-side COPY and return its raw CSV text."""
-    copy = (
-        f"COPY ({sql}) TO STDOUT (FORMAT csv, HEADER false, "
-        f"NULL '{null_marker}')"
-    )
-    proc = subprocess.run(
-        target.argv() + ["-c", copy],
-        capture_output=True,
-        text=True,
-        env=target.env(),
-    )
-    if proc.returncode != 0:
-        raise RuntimeError(
-            f"psql COPY failed (rc={proc.returncode}): {proc.stderr.strip()[:500]}"
+def _copy_error(
+    proc: subprocess.Popen, errf, parse_error: Exception | None = None
+) -> RuntimeError:
+    """The error for a failed COPY read. A parse error while psql is still
+    running, or after it exited cleanly, means the stream is at fault, and
+    the error names it; otherwise psql failed and its stderr is the cause."""
+    running = proc.poll() is None
+    # stop psql so wait() cannot block on a full stdout pipe
+    if running:
+        proc.kill()
+    rc = proc.wait()
+    errf.seek(0)
+    err = errf.read().decode("utf-8", "replace").strip()[:500]
+    if parse_error is not None and (running or rc == 0):
+        msg = f"COPY output could not be parsed: {parse_error}"
+        return RuntimeError(f"{msg} (psql stderr: {err})" if err else msg)
+    return RuntimeError(f"psql COPY failed (rc={rc}): {err}")
+
+
+@contextmanager
+def _copy_reader(
+    target: PsqlTarget,
+    sql: str,
+    names: list[str] | None = None,
+    header: bool = False,
+):
+    """Run ``COPY (sql) TO STDOUT (FORMAT csv, FORCE_QUOTE *)`` through psql
+    and yield a ``pyarrow.csv`` streaming reader over its stdout, or None
+    when COPY wrote nothing (an empty range). Every column parses as
+    string; only unquoted empty fields are NULL (module docstring).
+
+    Column names are ``names``, else the header line when ``header``, else
+    ``f0, f1, ...``. The reader consumes the pipe in ``_BLOCK_BYTES``
+    blocks, so memory stays bounded however large the range is. A psql
+    failure raises RuntimeError carrying psql's stderr; a stream the parser
+    rejects (a row over the block bound, say) raises one naming the parse
+    error.
+    """
+    import pyarrow as pa
+    import pyarrow.csv as pacsv
+
+    opts = "FORMAT csv, FORCE_QUOTE *" + (", HEADER true" if header else "")
+    # stderr spools to a temp file: a PIPE could deadlock if psql filled it
+    # while we drain stdout; psql only writes it on failure
+    with tempfile.TemporaryFile() as errf:
+        proc = subprocess.Popen(
+            target.argv() + ["-c", f"COPY ({sql}) TO STDOUT ({opts})"],
+            stdout=subprocess.PIPE, stderr=errf, env=target.env(),
         )
-    return proc.stdout
+        try:
+            # peek blocks until psql writes or exits: b"" is an empty range,
+            # or a failure before the first row
+            if not proc.stdout.peek(1):
+                if proc.wait():
+                    raise _copy_error(proc, errf)
+                yield None
+                return
+            keys = names or [f"f{i}" for i in range(_PG_MAX_COLUMNS)]
+            try:
+                yield pacsv.open_csv(
+                    proc.stdout,
+                    read_options=pacsv.ReadOptions(
+                        column_names=names,
+                        autogenerate_column_names=names is None and not header,
+                        use_threads=False,
+                        block_size=_BLOCK_BYTES,
+                    ),
+                    parse_options=pacsv.ParseOptions(
+                        newlines_in_values=True, ignore_empty_lines=False
+                    ),
+                    convert_options=pacsv.ConvertOptions(
+                        column_types=dict.fromkeys(keys, pa.string()),
+                        null_values=[""],
+                        strings_can_be_null=True,
+                        quoted_strings_can_be_null=False,
+                    ),
+                )
+            except pa.ArrowException as exc:
+                raise _copy_error(proc, errf, exc) from exc
+            if proc.wait():
+                raise _copy_error(proc, errf)
+        finally:
+            if proc.poll() is None:
+                proc.kill()
+                proc.wait()
 
 
 def run_sql(conn: PostgresConnection, sql: str) -> list[tuple[str | None, ...]]:
@@ -149,11 +231,11 @@ def run_sql(conn: PostgresConnection, sql: str) -> list[tuple[str | None, ...]]:
     return rows as tuples of (text | None). This is how the A3 probes
     (ENUM_LABELS_SQL, COMPOSITE_FIELDS_SQL, schema introspection) execute
     live without a JDBC jar — bounded catalog reads, never table data."""
-    raw = _copy_stdout(resolve_target(conn), sql, NULL_MARKER)
-    out: list[tuple[str | None, ...]] = []
-    for row in csv.reader(io.StringIO(raw)):
-        out.append(tuple(None if v == NULL_MARKER else v for v in row))
-    return out
+    with _copy_reader(resolve_target(conn), sql) as reader:
+        if reader is None:
+            return []
+        table = reader.read_all()
+    return list(zip(*(c.to_pylist() for c in table.columns)))
 
 
 # PG type name (pg_type.typname / information_schema udt_name) → Spark cast.
@@ -223,77 +305,37 @@ def read(
     lower_bound: int | None = None,
     upper_bound: int | None = None,
     num_partitions: int | None = None,
-    null_marker: str = NULL_MARKER,
-    sentinel_check_rows: int = 10_000,
 ) -> DataFrame:
     """COPY-transport scan with the jdbc.read surface (A1/A2 + splitter).
 
     Returns typed columns: the live A3 probe (or, for query=, a LIMIT 0
-    prepared probe) names each output column's PG type; plain scalars cast
+    header probe) names each output column's PG type; plain scalars cast
     JVM-side from the transported text, everything exotic stays text for
     the typemap parsers.
 
-    ``sentinel_check_rows``: the NULL-marker collision limit (module
-    docstring) gets a RUNTIME tripwire — one bounded server-side probe
-    renders the first N rows as text and counts occurrences of the
-    sentinel; any hit raises instead of silently mis-reading that value as
-    NULL. Three documented caveats (r10 ADVICE): (1) a sample, not a
-    proof — rows beyond N are unchecked; (2) CONSERVATIVE — the probe
-    matches the sentinel as a SUBSTRING of the record text, so a value
-    merely containing it raises even though whole-field NULL matching
-    would have transported it fine (prefer a collision-free
-    ``null_marker=`` over weakening the guard); (3) COST — the probe runs
-    the user query server-side under LIMIT N, which does NOT shortcut
-    aggregating/sorting queries, so an expensive ``query=`` read pays
-    roughly twice; set ``sentinel_check_rows=0`` to skip when the data is
-    known clean.
+    Each range query runs in its own Spark task (``spark.range`` with one
+    id per partition indexes the query list), so N ranges are N parallel
+    COPY streams with no shuffle. NULLs are exact and any string value
+    round-trips (module docstring); the parse is ``pyarrow.csv`` inside
+    ``mapInArrow``.
     """
     if (query is None) == (table is None):
         raise ValueError("exactly one of query= or table= must be given")
     if shutil.which("psql") is None:
         raise RuntimeError("psql not on PATH — the COPY transport needs the PG client")
     target = resolve_target(conn)
-    if sentinel_check_rows:
-        probe_src = query if query is not None else f"SELECT * FROM {quote_ident(table)}"
-        esc = null_marker.replace("'", "''")
-        # the whole-row render must use an alias no real column plausibly
-        # shadows: with a bare alias like `s`, a user column named s wins
-        # name resolution and the guard silently inspects ONLY that column
-        # (r10 ADVICE — test_copy_sentinel_guard_sees_whole_row)
-        n_bad = int(run_sql(conn, (
-            f"SELECT COUNT(*) FROM (SELECT __pgcopy_probe_row::text AS rowtxt FROM "
-            f"(SELECT * FROM ({probe_src}) q LIMIT {int(sentinel_check_rows)})"
-            f" __pgcopy_probe_row) t "
-            f"WHERE strpos(t.rowtxt, '{esc}') > 0"
-        ))[0][0])
-        if n_bad:
-            raise ValueError(
-                f"{n_bad} of the first {sentinel_check_rows} rows contain the "
-                f"NULL sentinel {null_marker!r} in their data — those values "
-                "would transport as NULL; pass a collision-free null_marker="
-            )
     if table is not None:
         cols = probe_schema(conn, table)
         query = f"SELECT * FROM {quote_ident(table)}"
     else:
         # A3 for ad-hoc queries: PG plans `LIMIT 0` without executing the
-        # subquery (the JDBC ResultSetMetaData trick over COPY) — a
-        # HEADER-only round-trip yields the output column names; types are
-        # resolved by materializing the LIMIT 0 result as a temp-free
-        # pg_typeof probe would need a row, so ad-hoc queries transport as
-        # text and cast client-side only where the caller selects to.
-        copy = (
-            f"COPY (SELECT * FROM ({query}) q LIMIT 0) TO STDOUT "
-            f"(FORMAT csv, HEADER true, NULL '{null_marker}')"
-        )
-        proc = subprocess.run(
-            target.argv() + ["-c", copy],
-            capture_output=True, text=True, env=target.env(),
-        )
-        if proc.returncode != 0:
-            raise RuntimeError(f"schema probe failed: {proc.stderr.strip()[:500]}")
-        names = next(csv.reader(io.StringIO(proc.stdout)))
-        cols = [(n, "text") for n in names]
+        # query (the JDBC ResultSetMetaData trick over COPY), and the header
+        # line names the output columns. Their types would need a row, so
+        # ad-hoc queries transport as text and callers cast what they need.
+        with _copy_reader(
+            target, f"SELECT * FROM ({query}) q LIMIT 0", header=True
+        ) as reader:
+            cols = [(n, "text") for n in reader.schema.names]
 
     n_parts = num_partitions or 1
     if partition_column is not None:
@@ -309,67 +351,16 @@ def read(
         [T.StructField(c, T.StringType(), True) for c, _ in cols]
     )
     colnames = [c for c, _ in cols]
-    target_argv = target.argv()
-    target_env_pw = target.password
 
     def _fetch(batches):
-        import tempfile
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                with _copy_reader(target, part_queries[i], colnames) as reader:
+                    if reader is not None:
+                        yield from reader
 
-        import pandas as pd  # executor-side
-
-        for pdf in batches:
-            for sql in pdf["part_sql"]:
-                env = dict(os.environ)
-                if target_env_pw:
-                    env["PGPASSWORD"] = target_env_pw
-                copy = (
-                    f"COPY ({sql}) TO STDOUT (FORMAT csv, HEADER false, "
-                    f"NULL '{null_marker}')"
-                )
-                # STREAMING pipe, not capture_output (r9 VERDICT nit): the
-                # partition's CSV text never materializes as one Python
-                # string — pandas consumes the pipe in bounded chunks, so
-                # executor memory is O(chunk) even when range sizing
-                # misjudges a hot partition. stderr spools to a temp file
-                # (a PIPE could deadlock if psql filled it while we drain
-                # stdout); psql only writes it on failure, so it stays
-                # tiny.
-                with tempfile.TemporaryFile(mode="w+") as errf:
-                    proc = subprocess.Popen(
-                        target_argv + ["-c", copy],
-                        stdout=subprocess.PIPE, stderr=errf,
-                        text=True, env=env,
-                    )
-                    try:
-                        try:
-                            for chunk in pd.read_csv(
-                                proc.stdout,
-                                header=None,
-                                names=colnames,
-                                dtype=str,
-                                keep_default_na=False,
-                                na_values=[null_marker],
-                                skip_blank_lines=True,
-                                chunksize=_COPY_CHUNK_ROWS,
-                            ):
-                                yield chunk
-                        except pd.errors.EmptyDataError:
-                            pass  # empty range
-                        rc = proc.wait()
-                        if rc != 0:
-                            errf.seek(0)
-                            raise RuntimeError(
-                                f"psql COPY failed: {errf.read().strip()[:500]}"
-                            )
-                    finally:
-                        if proc.poll() is None:
-                            proc.kill()
-                            proc.wait()
-
-    plan = spark.createDataFrame(
-        [(q,) for q in part_queries], "part_sql string"
-    ).repartition(len(part_queries), "part_sql")
-    raw = plan.mapInPandas(_fetch, schema=text_schema)
+    n = len(part_queries)
+    raw = spark.range(0, n, 1, n).mapInArrow(_fetch, schema=text_schema)
     return raw.select(*[_cast_plan(c, t) for c, t in cols])
 
 

@@ -26,10 +26,12 @@ from __future__ import annotations
 import shutil
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+REPO = Path(__file__).resolve().parents[1]
 _HAVE_PG = all(shutil.which(t) for t in ("initdb", "pg_ctl", "psql"))
 
 pytestmark = pytest.mark.skipif(
@@ -43,7 +45,7 @@ def live_pg():
         [sys.executable, "tools/livepg.py", "start"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     if r.returncode != 0:
         pytest.skip(f"local PG could not start: {r.stdout} {r.stderr}"[:300])
@@ -195,35 +197,67 @@ def test_copy_null_vs_empty_string_fidelity(spark, live_pg):
     assert row.empty_s == "" and row.null_s is None
 
 
-def test_copy_sentinel_collision_guard_trips(spark, live_pg):
-    """r9 VERDICT nit: data containing the literal NULL sentinel would
-    silently transport as NULL (pandas can't see PG's CSV quoting). The
-    sampled runtime guard must RAISE on such data instead, and a
-    collision-free null_marker= must read the same value through clean."""
+# values a CSV reader could confuse with NULL, a delimiter, a quote or a
+# record end: the old sentinel, '', NULL, \N, 'NULL', CR/LF, and non-ASCII
+# next to a quote and a comma
+_HAZARDS = ["__PG_NULL__", "", None, "\\N", "NULL", "a\r\nb", 'é"q,']
+_HAZARD_SQL = """
+SELECT i, s, encode(convert_to(s, 'UTF8'), 'hex') AS hex
+FROM (VALUES (1, '__PG_NULL__'), (2, ''), (3, NULL), (4, E'\\\\N'),
+             (5, 'NULL'), (6, E'a\\r\\nb'), (7, 'é"q,')) v(i, s)
+ORDER BY i"""
+
+
+def test_copy_any_string_round_trips_byte_for_byte(spark, live_pg, monkeypatch):
+    """FORCE_QUOTE * makes NULL the only unquoted empty field, so every
+    string — the old __PG_NULL__ sentinel included — reads back as exactly
+    the bytes the server holds (its own hex rendering), and NULL stays NULL:
+    through the executor path (mapInArrow), through run_sql, and for a
+    single-column query whose first row is NULL (an empty CSV line).
+    run_sql is re-run with the psql child under LANG=C: the wire encoding
+    must not follow the locale."""
     from pg2parquet_spark.sources import pgcopy
 
-    poisoned = f"SELECT 1 AS i, '{pgcopy.NULL_MARKER}'::text AS s"
-    with pytest.raises(ValueError, match="NULL sentinel"):
-        pgcopy.read(spark, live_pg, query=poisoned)
-    row = pgcopy.read(
-        spark, live_pg, query=poisoned, null_marker="__ALT_NULL__"
-    ).collect()[0]
-    assert row.s == pgcopy.NULL_MARKER
+    def check(rows):
+        assert [s for s, _ in rows] == _HAZARDS
+        assert [None if s is None else s.encode() for s, _ in rows] == [
+            None if h is None else bytes.fromhex(h) for _, h in rows
+        ]
+
+    df = pgcopy.read(spark, live_pg, query=_HAZARD_SQL)
+    check([(r.s, r.hex) for r in sorted(df.collect(), key=lambda r: int(r.i))])
+    rows = pgcopy.run_sql(live_pg, _HAZARD_SQL)
+    check([(s, h) for _, s, h in rows])
+    monkeypatch.setenv("LANG", "C")
+    monkeypatch.setenv("LC_ALL", "C")
+    assert pgcopy.run_sql(live_pg, _HAZARD_SQL) == rows
+
+    one_col = "SELECT s FROM (VALUES (1, NULL), (2, 'x'), (3, NULL)) v(i, s) ORDER BY i"
+    assert pgcopy.run_sql(live_pg, one_col) == [(None,), ("x",), (None,)]
+    got = [r.s for r in pgcopy.read(spark, live_pg, query=one_col).collect()]
+    assert got == [None, "x", None]
 
 
-def test_copy_sentinel_guard_sees_whole_row(spark, live_pg):
-    """r10 ADVICE: the collision probe renders the WHOLE row. With the old
-    bare `s` subquery alias, a user column literally named `s` won name
-    resolution and the guard silently inspected only that column — a
-    poisoned value in any OTHER column slipped through. The fixed
-    __pgcopy_probe_row alias must catch it."""
+@pytest.mark.parametrize("n", [4, 8])
+def test_copy_partitioned_read_runs_one_range_per_task(spark, live_pg, n):
+    """Each range query gets its own Spark partition: hash-distributing the
+    range queries over N buckets could leave one bucket with two ranges and
+    another empty, which getNumPartitions() alone does not show. Hashing
+    four queries can come out even by chance, so eight are checked too."""
     from pg2parquet_spark.sources import pgcopy
 
-    poisoned = (
-        f"SELECT 'clean'::text AS s, '{pgcopy.NULL_MARKER}'::text AS other"
+    df = pgcopy.read(
+        spark,
+        live_pg,
+        table="plain",
+        partition_column="id",
+        lower_bound=1,
+        upper_bound=1001,
+        num_partitions=n,
     )
-    with pytest.raises(ValueError, match="NULL sentinel"):
-        pgcopy.read(spark, live_pg, query=poisoned)
+    sizes = df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    rows = 1000 // n
+    assert sorted((r.p, r["count"]) for r in sizes) == [(p, rows) for p in range(n)]
 
 
 def test_copy_empty_partition_ranges_yield_no_rows(spark, live_pg):
@@ -242,3 +276,52 @@ def test_copy_empty_partition_ranges_yield_no_rows(spark, live_pg):
     assert df.count() == 1000
     empty = pgcopy.read(spark, live_pg, query="SELECT id FROM plain WHERE id < 0")
     assert empty.count() == 0
+
+
+def test_copy_psql_failure_raises_with_stderr(spark, live_pg):
+    """A COPY that fails before its first row, or after ~90k rows already
+    streamed into the parser, raises with psql's error text instead of
+    reading as an empty or truncated result."""
+    from pg2parquet_spark.sources import pgcopy
+
+    with pytest.raises(RuntimeError, match="syntax error"):
+        pgcopy.run_sql(live_pg, "SELEC 1")
+    late = (
+        "SELECT g, CASE WHEN g = 90000 THEN 1 / (g - g) END AS x "
+        "FROM generate_series(1, 100000) g"
+    )
+    with pytest.raises(RuntimeError, match="division by zero"):
+        pgcopy.run_sql(live_pg, late)
+    with pytest.raises(Exception, match="division by zero"):
+        pgcopy.read(spark, live_pg, query=late).count()
+
+
+# 1M copies of 'é"' is 3 MB of UTF-8 and 4 MB of CSV once the quotes double
+_WIDE_SQL = (
+    "SELECT i, CASE WHEN i = 2 THEN repeat('é\"', 1000000) ELSE 'x' END AS s "
+    "FROM generate_series(1, 3) i"
+)
+
+
+def test_copy_reads_rows_of_several_mib(spark, live_pg):
+    """A row far larger than pyarrow's default 1 MiB read block (a wide
+    text, jsonb or hex-cast bytea value) reads whole, between small rows,
+    through the executor path and through run_sql."""
+    from pg2parquet_spark.sources import pgcopy
+
+    want = [("1", "x"), ("2", 'é"' * 1_000_000), ("3", "x")]
+    assert pgcopy.run_sql(live_pg, _WIDE_SQL) == want
+    rows = pgcopy.read(spark, live_pg, query=_WIDE_SQL).collect()
+    assert sorted((r.i, r.s) for r in rows) == want
+
+
+def test_copy_parse_error_names_the_stream_fault(live_pg, monkeypatch):
+    """When the parser rejects the stream (here a row over a shrunken block
+    bound) while psql is healthy, the error names the parse error rather
+    than reporting the psql child it had to stop."""
+    from pg2parquet_spark.sources import pgcopy
+
+    monkeypatch.setattr(pgcopy, "_BLOCK_BYTES", 1 << 20)
+    with pytest.raises(RuntimeError, match="COPY output could not be parsed") as err:
+        pgcopy.run_sql(live_pg, _WIDE_SQL)
+    assert "straddl" in str(err.value) and "psql COPY failed" not in str(err.value)

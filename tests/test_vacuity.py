@@ -15,9 +15,13 @@ query that is 0-rows at BOTH SFs.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from tests.conftest import SF_CORRECT
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 FIXED = [
@@ -62,7 +66,7 @@ def test_vacuity_tool_flags_zero_at_both(tmp_path):
         [sys.executable, "tools/vacuity.py", str(a), str(b)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert r.returncode == 1
     assert "dead" in r.stdout and "good" not in r.stdout.replace("good: ", "")
@@ -76,7 +80,7 @@ def test_vacuity_tool_flags_zero_at_both(tmp_path):
         [sys.executable, "tools/vacuity.py", str(a), str(b)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert r2.returncode == 1
     assert "GATE-VACUOUS dead" in r2.stdout
@@ -84,7 +88,7 @@ def test_vacuity_tool_flags_zero_at_both(tmp_path):
         [sys.executable, "tools/vacuity.py", "--warn-ok", str(a), str(b)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert r3.returncode == 0
     assert "GATE-VACUOUS dead" in r3.stdout
@@ -96,7 +100,7 @@ def test_vacuity_tool_flags_zero_at_both(tmp_path):
         [sys.executable, "tools/vacuity.py", str(a), str(b)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert r4.returncode == 0
     assert "VACUOUS" not in r4.stdout
