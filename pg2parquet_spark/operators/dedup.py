@@ -32,6 +32,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pg2parquet_spark.operators.similarity import (
+    _PLANES,
+    EMB_DIM,
+    bucket_expr_offset_n,
+    bucket_sql_offset,
+    bucket_sql_offset_n,
+    dot_col,
+    dot_sql,
+    ordered_dot,
+)
 from pg2parquet_spark.operators.text import (
     normalize_text,
     token_shingles,
@@ -777,16 +787,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- embedding cosine pairs --
-def _dot_sql(a: str, b: str, dim: int, zero_based: bool) -> str:
-    off = -1 if zero_based else 0
-    return " + ".join(
-        f"CAST({a}[{i + off}] AS DOUBLE) * CAST({b}[{i + off}] AS DOUBLE)"
-        for i in range(1, dim + 1)
-    )
-
-
-EMB_DIM = 64
-
 # Independent sign-LSH hash tables for candidate generation: disjoint
 # deterministic hyperplane sets (plane ids shifted per table), MULTI-PROBE:
 # each table also probes the 4 buckets at Hamming distance 1 from a vector's
@@ -822,8 +822,6 @@ _EMB_COS_THRESHOLD = 0.4
 
 
 def _emb_bucketed_sql() -> str:
-    from pg2parquet_spark.operators.similarity import bucket_sql_offset
-
     cols = ", ".join(
         f"{bucket_sql_offset('embedding', EMB_DIM, False, off)} AS k{t}"
         for t, off in enumerate(_EMB_LSH_OFFSETS)
@@ -839,7 +837,7 @@ def _emb_pair_union_sql() -> str:
         )
         joins.append(
             f"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
+       {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
   FROM (SELECT vec_id, embedding, unnest([{probes}]) AS pk FROM bk) a
   JOIN bk b ON a.pk = b.k{t} AND a.vec_id < b.vec_id"""
         )
@@ -850,9 +848,9 @@ def _emb_pair_union_sql() -> str:
     "dedup_embedding_cosine_exact",
     oracle=f"""
 SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
+       {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}
+WHERE {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}
 """,
     doc="EXACT embedding-cosine near-dup pairs: ALL pairs with cos_sim >= "
     f"{_EMB_COS_THRESHOLD}, no candidate pruning. Quadratic BY CONTRACT — the "
@@ -879,10 +877,9 @@ def _exact_pair_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract the BNLJ build side already imposed, stated by the operator
     doc since r2 ("quadratic BY CONTRACT... only runnable when one side
     fits in memory") — and a mapInPandas kernel scores each corpus batch
-    against it with the dimension-ordered fold (acc += a[:,d]·b[d,:]ᵀ),
-    so every pair's sum keeps the oracle's left-assoc IEEE order
-    (the _score_bucket_blocks argument) while only thresholded survivors
-    ever become rows. Used by dedup_embedding_cosine_exact and (ids only)
+    against it with ``ordered_dot``, so every pair's sum keeps the
+    oracle's left-assoc IEEE order while only thresholded survivors ever
+    become rows. Used by dedup_embedding_cosine_exact and (ids only)
     the IVF recall evals' truth arm."""
     import numpy as np
     import pandas as pd
@@ -913,9 +910,7 @@ def _exact_pair_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             av = pdf["vec_id"].to_numpy(dtype=np.int64)
             A = np.array(list(pdf["embedding"]), dtype=np.float64)
-            acc = np.zeros((A.shape[0], M.shape[0]))
-            for d in range(A.shape[1]):
-                acc += A[:, d : d + 1] * M[:, d][None, :]
+            acc = ordered_dot(A, M)
             mask = (acc >= threshold) & (av[:, None] < mv[None, :])
             ai, mi = np.nonzero(mask)
             yield pd.DataFrame(
@@ -951,8 +946,6 @@ SELECT DISTINCT a_id, b_id, cos_sim FROM pairs WHERE cos_sim >= {_EMB_COS_THRESH
     "zero false positives (the re-score is exact).",
 )
 def dedup_embedding_cosine_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pg2parquet_spark.operators.similarity import _PLANES, bucket_expr_offset_n
-
     emb = table(spark, sf_dir, "embeddings")
     # r13 grouped-scorer shape: instead of narrow candidate-id joins whose
     # survivors re-attach two ~540 B embeddings each through shuffle-hash
@@ -962,7 +955,7 @@ def dedup_embedding_cosine_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFr
     # and one (tbl, pk) exchange feeds the grouped Arrow kernel that scores
     # all-rows × member blocks in numpy. Embedding bytes cross exactly ONE
     # exchange; candidate pairs exist only as matrix entries
-    # (_score_bucket_blocks; the IVF cell-block shape, r12 VERDICT #1).
+    # (_score_groups; the IVF cell-block shape, r12 VERDICT #1).
     bk = emb.selectExpr(
         "vec_id",
         "embedding",
@@ -998,47 +991,50 @@ def dedup_embedding_cosine_lsh_fixed(spark: SparkSession, sf_dir: str) -> DataFr
     # 3-column distinct == (a_id, b_id) distinct: cos_sim is deterministic
     # per pair (fixed-order fold), collapsing multi-table/probe collisions
     # exactly like the oracle's SELECT DISTINCT
-    return _score_bucket_blocks(rows, symmetric=True).distinct()
+    return _score_groups(rows, ["tbl", "pk"], None, ("pr", 1), "lt").distinct()
 
 
-def _score_bucket_blocks(rows: DataFrame, symmetric: bool) -> DataFrame:
-    """Grouped exact scorer for the LSH family (r13) — the IVF cell-block
-    shape (_score_cell_triangles / _score_cell_blocks) transplanted per the
-    r12 VERDICT: ``rows`` = (vec_id, embedding, tbl, pk, pr) emission rows,
-    one per (vector, hash table, probed bucket); ``pr`` = 1 when the row is
-    a MEMBER of the bucket it lands in (its own key — eligible to RECEIVE
-    pairs), 0 when it is probe-only. One group per (tbl, pk) scores its
-    all-rows × member dot block in numpy and emits only thresholded
-    survivors — candidate pairs exist only as matrix entries, never as
-    rows.
+def _score_groups(
+    rows: DataFrame,
+    keys: list[str],
+    left: tuple[str, int] | None,
+    right: tuple[str, int] | None,
+    rule: str,
+) -> DataFrame:
+    """The one grouped exact scorer of the embedding family. ``rows`` are
+    (vec_id, embedding, <side column>) rows plus the group ``keys``; one
+    group per key scores its left × right dot block in numpy and emits only
+    the thresholded (a_id, b_id, cos_sim) survivors, so candidate pairs
+    exist only as matrix entries, never as rows. ``left`` and ``right``
+    pick each side's rows as a (side column, value) pair; None takes every
+    row of the group.
 
-    Why this replaced the candidate-pair tail (_score_candidate_pairs,
-    r8-r12): every candidate pair used to ride TWO ~540 B embedding
-    attaches through shuffle-hash joins, and cross the Python boundary as
-    two embeddings per pair — at the 60k synth point that was 24.5M pairs
-    of wide rows (the un-capped form sort-spilled ~72 GB before the r7
-    caps). Here the shuffled and Arrow mass is the EMISSION rows, bounded
-    by probes × candidacy caps per vector and independent of how much pair
-    mass the buckets hold (guide §2.3 "shuffle keys/metadata, move heavy
-    bytes once", §3 join removal, §4 batch the boundary). The r9 recall
-    tier's pre-score distinct is obsolete for the same reason: cross-table
-    candidate duplication now costs duplicate matrix entries (kernel
-    FLOPs), not duplicate wide rows.
+    Pair rules (the oracles' join residuals):
+    - ``lt``: (a, b) with a < b — a.vec_id < b.vec_id. The LSH builds
+      (all rows × bucket members, pr = 1) and the symmetric IVF arms (the
+      cell's upper triangle).
+    - ``ne``: a ≠ b, emitted as (min, max) — the asymmetric IVF arms'
+      p.vec_id <> h.vec_id over probe (role 1) × home (role 0);
+      orientation is normalized after scoring because dot is symmetric.
+    - ``any``: every left × right pair in order — incremental ingest's
+      new-batch prober (pr = 0) × corpus member (pr = 1).
 
-    Pair semantics per group (the old per-table join, verbatim):
-    symmetric — emit (a, b) for any row a, member b with a.vec_id <
-    b.vec_id (the a_id < b_id join residual; a pair lands in the group
-    keyed by the LARGER id's bucket when the smaller probes it, exactly
-    like cand = a-explode ⋈ b-members); asymmetric (incremental ingest) —
-    emit (new, old) for prober new (pr=0) × member old (pr=1), no id
-    order. Duplicate scoring across tables/probes is exact-idempotent
-    (same dimension-ordered fold → bit-identical cos_sim), so the final
-    3-column distinct collapses exactly the duplicates the oracle's
-    SELECT DISTINCT does."""
+    Why grouped: a candidate-pair tail would move two ~540 B embeddings
+    per pair through shuffle-hash attaches and across the Python boundary
+    (24.5M wide pair rows at the 60k synth point). Here the shuffled and
+    Arrow mass is the emission rows, bounded by probes × candidacy caps
+    per vector and independent of the pair mass a group holds.
+    Exactness: every dot goes through ``ordered_dot`` (the oracle's
+    left-assoc IEEE order), so a pair scored in several groups — across
+    tables, probes or cells — gets a bit-identical cos_sim and the callers'
+    3-column distinct collapses exactly the duplicates the oracle's SELECT
+    DISTINCT does."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+    if rule not in ("lt", "ne", "any"):
+        raise ValueError(f"unknown pair rule {rule!r}")
     schema = StructType(
         [
             StructField("a_id", LongType()),
@@ -1055,30 +1051,33 @@ def _score_bucket_blocks(rows: DataFrame, symmetric: bool) -> DataFrame:
         }
     )
 
-    def score(pdf):
-        mm = pdf[pdf["pr"] == 1]
-        aa = pdf if symmetric else pdf[pdf["pr"] == 0]
-        if len(mm) == 0 or len(aa) == 0 or len(pdf) < 2:
-            return empty
-        A = np.array(list(aa["embedding"]), dtype=np.float64)
-        M = np.array(list(mm["embedding"]), dtype=np.float64)
-        # dimension-ordered fold: acc[i,j] = ((0.0 + t1) + t2) + … keeps
-        # every pair's sum in the oracle's left-assoc IEEE order while
-        # vectorizing over the block (same argument as _score_cell_blocks)
-        acc = np.zeros((A.shape[0], M.shape[0]))
-        for d in range(A.shape[1]):
-            acc += A[:, d : d + 1] * M[:, d][None, :]
-        av = aa["vec_id"].to_numpy(dtype=np.int64)
-        mv = mm["vec_id"].to_numpy(dtype=np.int64)
-        mask = acc >= threshold
-        if symmetric:
-            mask &= av[:, None] < mv[None, :]
-        ai, mi = np.nonzero(mask)
-        return pd.DataFrame(
-            {"a_id": av[ai], "b_id": mv[mi], "cos_sim": acc[ai, mi]}
-        )
+    def side(pdf, pred):
+        return pdf if pred is None else pdf[pdf[pred[0]] == pred[1]]
 
-    return rows.groupBy("tbl", "pk").applyInPandas(score, schema)
+    def score(pdf):
+        lhs, rhs = side(pdf, left), side(pdf, right)
+        # a lone row has no partner: lt/ne exclude self-pairs and the any
+        # rule's sides are disjoint
+        if len(lhs) == 0 or len(rhs) == 0 or len(pdf) < 2:
+            return empty
+        acc = ordered_dot(
+            np.array(list(lhs["embedding"]), dtype=np.float64),
+            np.array(list(rhs["embedding"]), dtype=np.float64),
+        )
+        lv = lhs["vec_id"].to_numpy(dtype=np.int64)
+        rv = rhs["vec_id"].to_numpy(dtype=np.int64)
+        mask = acc >= threshold
+        if rule == "lt":
+            mask &= lv[:, None] < rv[None, :]
+        elif rule == "ne":
+            mask &= lv[:, None] != rv[None, :]
+        li, ri = np.nonzero(mask)
+        a, b = lv[li], rv[ri]
+        if rule == "ne":
+            a, b = np.minimum(a, b), np.maximum(a, b)
+        return pd.DataFrame({"a_id": a, "b_id": b, "cos_sim": acc[li, ri]})
+
+    return rows.groupBy(*keys).applyInPandas(score, schema)
 
 
 # ----------------------------------- corpus-adaptive embedding LSH planes --
@@ -1221,8 +1220,6 @@ def _adapt_bk_sql(offsets: tuple[int, ...] = _EMB_LSH_OFFSETS) -> str:
     by the pair oracle and the bucket-audit oracle so both engines derive
     buckets from the identical expression text; ``offsets`` selects the
     hash-table family (4 tables for the primary, 8 for the recall tier)."""
-    from pg2parquet_spark.operators.similarity import bucket_sql_offset_n
-
     keys = ", ".join(
         f"{bucket_sql_offset_n('embedding', EMB_DIM, False, off, _ADAPT_MAX_BITS)} AS kf{t}"
         for t, off in enumerate(offsets)
@@ -1264,7 +1261,7 @@ def _adapt_oracle_sql(
     for t in range(len(offsets)):
         joins.append(
             f"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
+       {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} AS cos_sim
   FROM (SELECT bk.vec_id, bk.embedding, xor(bk.k{t}, pm.m) AS pk
           FROM bkr bk JOIN occ{t} ON bk.k{t} = occ{t}.key, pm
          WHERE (bk.bits <= 5 OR bk.rn{t} <= {bucket_cap})
@@ -1313,7 +1310,7 @@ SELECT DISTINCT a_id, b_id, cos_sim FROM pairs WHERE cos_sim >= {_EMB_COS_THRESH
     "bits (tools/scaleprobe.py). Execution shape (r13, the IVF cell-block "
     "transplant): capped rows emit one embedding-carrying row per gated "
     "probe mask and ONE (table, bucket) exchange feeds a grouped Arrow "
-    "kernel that scores all-rows × member blocks (_score_bucket_blocks) — "
+    "kernel that scores all-rows × member blocks (_score_groups) — "
     "candidate pairs exist only as matrix entries, so shuffle and Arrow "
     "mass are O(N·probes·emb), independent of in-bucket pair mass. "
     "RECALL CONTRACT (r9, "
@@ -1526,19 +1523,6 @@ def _recall_audit_df(
     )
 
 
-def adaptive_lsh_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_cosine_lsh. Until r12 the registered
-    form localCheckpointed its signature table (it fed 8 join sides) and
-    this twin existed to expose the truncated lineage to the plan gates
-    (r6 ADVICE: the 1-row bit-width crossJoin must never pass by
-    invisibility). The r13 grouped-scorer build is one linear pipeline
-    with a single consumer of the signature rows — no checkpoint, nothing
-    truncated — so the twin is now identical to the registered plan; kept
-    so the gates' override table stays uniform across the family (the IVF
-    precedent)."""
-    return _adaptive_lsh_build(spark, sf_dir)
-
-
 # ------------------------------------ recall-tier embedding LSH (r9) -------
 # The measured recall contract (SCALING_r09_embrecall.md) prices the primary
 # adaptive LSH honestly: flat cost buys recall 0.67/0.07/0.005 at
@@ -1612,24 +1596,6 @@ _EMB_RECALL_PROBE_BUDGET = 1 + _ADAPT_MAX_BITS + (_ADAPT_MAX_BITS * (_ADAPT_MAX_
     "bucket-audit discipline.",
 )
 def dedup_embedding_cosine_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _adaptive_lsh_build(
-        spark,
-        sf_dir,
-        offsets=_EMB_RECALL_OFFSETS,
-        bucket_cap=_EMB_RECALL_BUCKET_CAP,
-        occ_bound=_EMB_RECALL_OCC_BOUND,
-        budget=_EMB_RECALL_PROBE_BUDGET,
-    )
-
-
-def recall_lsh_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_cosine_lsh_recall — same role as
-    adaptive_lsh_plan_audit for the primary (identical to the registered
-    plan since the r13 grouped-scorer build removed the checkpoint; kept
-    for gate-table uniformity). The r9 pre-score distinct is gone for the
-    reason _score_bucket_blocks documents: candidate duplication no longer
-    rides a per-pair embedding attach, so there is nothing to dedupe
-    before the kernel."""
     return _adaptive_lsh_build(
         spark,
         sf_dir,
@@ -1794,7 +1760,7 @@ def _ivf_chain_sql(nprobe: int = _IVF_NPROBE) -> str:
     cells per vector, MATERIALIZED — consumed by both pair-join sides and
     by the cell audit). The SQL twin of ``_ivf_assignments``; ``nprobe``
     selects the arm (2 = primary tier, 4 = recall arm)."""
-    d = _dot_sql("e.embedding", "c.cemb", EMB_DIM, False)
+    d = dot_sql("e.embedding", "c.cemb", EMB_DIM, False)
     return f"""par AS (SELECT {_ivf_k_case('COUNT(*)')} AS k FROM embeddings),
 sd AS (SELECT vec_id, embedding, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
        FROM embeddings WHERE vec_id % {_IVF_SEED_MOD} = {_IVF_SEED_REM}),
@@ -1820,7 +1786,7 @@ pairs AS (
   WHERE a.rnc <= {cap} AND b.rnc <= {cap}),
 scored AS (
   SELECT p.a_id, p.b_id,
-         {_dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} AS cos_sim
+         {dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} AS cos_sim
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id)
@@ -1860,8 +1826,6 @@ def _ivf_assignments(
       kept as the pure-Catalyst reference the kernel is tested against
       (and the form a SQL-only deployment would run)."""
     from pyspark.sql import Window as W
-
-    from pg2parquet_spark.operators.similarity import dot_col
 
     # resolved at CALL time (not a def-time default) so experiment probes
     # can still patch the module constant
@@ -1973,12 +1937,11 @@ def _ivf_rank_cells(Ae, C, nprobe: int):
     cid ASC) — the shared score core of the single-table and fused
     multi-table assignment kernels.
 
-    Exactness: every dot folds dimensions IN ORDER (acc[i,j] accumulates
-    ((0.0+t1)+t2)+... exactly like the oracle's unrolled sum and the HOF
-    aggregate — never a BLAS matmul, whose reduction order is
-    unspecified), and top-nprobe extraction is nprobe argmax-and-mask
-    passes (argmax returns the FIRST maximal column = lowest cid on exact
-    dot ties, matching the window's ORDER BY dot DESC, cid).
+    Exactness: every dot is an ``ordered_dot`` (the oracle's unrolled
+    left-assoc sum, like the HOF aggregate), and top-nprobe extraction is
+    nprobe argmax-and-mask passes (argmax returns the FIRST maximal column
+    = lowest cid on exact dot ties, matching the window's ORDER BY dot
+    DESC, cid).
 
     Performance: the k axis is TILED so the accumulator tile stays
     cache-resident across the 64 dimension passes (r11). The untiled form
@@ -1997,12 +1960,7 @@ def _ivf_rank_cells(Ae, C, nprobe: int):
     # tile width: rows×tile×8 ≈ 1 MiB keeps the working tile in L2
     tile = max(8, min(kk, (1 << 17) // max(rows_n, 1)))
     for a in range(0, kk, tile):
-        b = min(a + tile, kk)
-        Ct = C[a:b]
-        at = np.zeros((rows_n, b - a))
-        for d in range(Ae.shape[1]):
-            at += Ae[:, d : d + 1] * Ct[:, d][None, :]
-        acc[:, a:b] = at
+        acc[:, a : a + tile] = ordered_dot(Ae, C[a : a + tile])
     rows = np.arange(rows_n)
     width = min(nprobe, kk)
     ranked = np.empty((rows_n, width), dtype=np.int32)
@@ -2145,7 +2103,7 @@ def _ivf_assignments_multi(
     "dedup_embedding_ivf_cell_audit), scored as CELL BLOCKS since r11 "
     "(embeddings attach ONCE to the capped assignment rows and a grouped "
     "Arrow kernel scores each cell's i<j upper triangle in numpy — "
-    "_score_cell_triangles; candidate pairs exist only as matrix entries, "
+    "_score_groups; candidate pairs exist only as matrix entries, "
     "never as rows, value-identical to the candidate-first form the "
     "oracle expresses). Why it exists: hyperplane LSH "
     "recall at a fixed probe budget decays exponentially with bucket width "
@@ -2162,65 +2120,6 @@ def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_pair_build(spark, sf_dir)
 
 
-def _ivf_member_rows(
-    spark: SparkSession, sf_dir: str, nprobe: int | None = None
-) -> DataFrame:
-    """(vec_id, embedding, cid) member rows for the symmetric arms — the
-    assignment kernel EMITS the embedding alongside its top-nprobe cid
-    array (one Arrow row per vector, cids as a primitive list — no
-    nprobe-fold duplication at the Python boundary), and a JVM-side
-    explode fans out the per-cell membership. r12 restructure: the
-    previous shape shipped narrow (vec_id, cid) rows through a cap
-    window, then re-attached embeddings with a shuffle-hash join — the
-    heavy embedding bytes crossed THREE exchanges (emb by vec_id, capped
-    by vec_id, wide by cid). Carrying the embedding from the kernel lets
-    the single (cid) exchange feed both the cap window and the grouped
-    scorer, so the heavy bytes move ONCE (guide §8's move-heavy-bytes-
-    once rule applied to the cell build)."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
-
-    nprobe = nprobe or _IVF_NPROBE
-    emb = table(spark, sf_dir, "embeddings")
-    n = _ivf_corpus_n(spark, sf_dir, emb)
-    k = _IVF_K_BASE * (1 << sum(n > t for t in _IVF_K_THRESHOLDS))
-    bc = _ivf_centroid_bc(spark, sf_dir, emb, k, _IVF_SEED_REM)
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", emb.schema["embedding"].dataType),
-            StructField("cids", ArrayType(IntegerType())),
-        ]
-    )
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = bc.value
-        if C.shape[0] == 0:
-            return  # empty centroid sample: degrade to empty, like the oracle
-        chunk = max(1, 8_000_000 // max(C.shape[0], 1))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.array(list(pdf["embedding"]), dtype=np.float64)
-            outs = [
-                _ivf_rank_cells(A[s : s + chunk], C, nprobe)
-                for s in range(0, A.shape[0], chunk)
-            ]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "embedding": pdf["embedding"],
-                    "cids": list(np.concatenate(outs)),
-                }
-            )
-
-    asg = emb.select("vec_id", "embedding").mapInPandas(assign, schema)
-    return asg.select("vec_id", "embedding", F.explode("cids").alias("cid"))
-
-
 def _ivf_pair_build(
     spark: SparkSession,
     sf_dir: str,
@@ -2228,87 +2127,40 @@ def _ivf_pair_build(
     cap: int = _IVF_CELL_CAP,
 ) -> DataFrame:
     """Shared pair build of the symmetric IVF arms: assignment (Arrow
-    kernel, embedding carried in-row — _ivf_member_rows) → per-cell
-    candidacy window → grouped triangle scorer REUSING the window's (cid)
-    partitioning.
+    kernel, embedding carried in-row — the one-table case of
+    _ivf_member_rows_multi) → per-cell candidacy window → grouped scorer
+    over each cell's i<j upper triangle (_score_groups, rule ``lt``)
+    REUSING the window's (cid) partitioning.
 
-    Scored as CELL BLOCKS since r11 (r10 VERDICT #5): a grouped Arrow
-    kernel scores each cell's i<j upper triangle in numpy
-    (_score_cell_triangles) — candidate pairs exist only as matrix
-    entries, never as rows, so BOTH shuffle and Arrow mass are
-    O(N·nprobe·emb) regardless of how much pair mass the cells hold.
-    r12 plan shape: the member rows cross exactly ONE exchange
-    (hash(cid) — the cap window's), which the groupBy-applyInPandas
-    scorer reuses; the r11 form's shuffle-hash embedding attach (3
-    exchanges of embedding-bearing rows + a localCheckpoint job for a
-    single-consumer subtree) is gone. Catalyst additionally pushes a
-    WindowGroupLimit below the exchange, so over-cap members of a
-    pathological mega-cell are dropped map-side before they shuffle.
-    Value-identity argument as mt4: the per-pair dot folds dimensions in
-    the oracle's exact order, duplicate scoring is exact-idempotent, and
-    the post-threshold distinct collapses the same duplicates the
-    oracle's SELECT DISTINCT does."""
+    Scored as CELL BLOCKS since r11 (r10 VERDICT #5): candidate pairs
+    exist only as matrix entries, never as rows, so BOTH shuffle and
+    Arrow mass are O(N·nprobe·emb) regardless of how much pair mass the
+    cells hold. r12 plan shape: the member rows cross exactly ONE
+    exchange (hash(cid) — the cap window's), which the
+    groupBy-applyInPandas scorer reuses; the r11 form's shuffle-hash
+    embedding attach (3 exchanges of embedding-bearing rows + a
+    localCheckpoint job for a single-consumer subtree) is gone. Catalyst
+    additionally pushes a WindowGroupLimit below the exchange, so
+    over-cap members of a pathological mega-cell are dropped map-side
+    before they shuffle. Value-identity argument as mt4: the per-pair dot
+    folds dimensions in the oracle's exact order, duplicate scoring is
+    exact-idempotent, and the post-threshold distinct collapses the same
+    duplicates the oracle's SELECT DISTINCT does."""
     from pyspark.sql import Window as W
 
-    rows = _ivf_member_rows(spark, sf_dir, nprobe)
+    # resolved at CALL time (not a def-time default) so experiment probes
+    # can still patch the module constant
+    nprobe = nprobe or _IVF_NPROBE
+    rows = _ivf_member_rows_multi(spark, sf_dir, nprobe, (_IVF_SEED_REM,))
     capped = (
-        rows.withColumn(
+        rows.select("vec_id", "embedding", "cid")
+        .withColumn(
             "rnc", F.row_number().over(W.partitionBy("cid").orderBy("vec_id"))
         )
         .filter(F.col("rnc") <= cap)
-        .select("vec_id", "cid", "embedding")
+        .drop("rnc")
     )
-    return _score_cell_triangles(capped).distinct()
-
-
-def _score_cell_triangles(wide: DataFrame) -> DataFrame:
-    """Grouped exact scorer for the SYMMETRIC arms: wide = (vec_id, cid,
-    embedding) capped rows; one group per cid scores the cell's i<j upper
-    triangle (the oracle's a.vec_id < b.vec_id) in numpy and emits only
-    thresholded survivors. Same dimension-ordered dot fold as
-    _score_cell_blocks."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("a_id", LongType()),
-            StructField("b_id", LongType()),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-    threshold = _EMB_COS_THRESHOLD
-
-    def score(pdf):
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {
-                    "a_id": np.array([], dtype=np.int64),
-                    "b_id": np.array([], dtype=np.int64),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
-            )
-        X = np.array(list(pdf["embedding"]), dtype=np.float64)
-        v = pdf["vec_id"].to_numpy(dtype=np.int64)
-        acc = np.zeros((X.shape[0], X.shape[0]))
-        for d in range(X.shape[1]):
-            acc += X[:, d : d + 1] * X[:, d][None, :]
-        mask = (acc >= threshold) & (v[:, None] < v[None, :])
-        ai, bi = np.nonzero(mask)
-        return pd.DataFrame(
-            {"a_id": v[ai], "b_id": v[bi], "cos_sim": acc[ai, bi]}
-        )
-
-    return wide.groupBy("cid").applyInPandas(score, schema)
-
-
-def ivf_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_ivf. Since the r12 restructure the
-    registered form no longer localCheckpoints (the member rows have ONE
-    consumer), so the twin is identical to the registered plan — kept so
-    the plan gates' override table stays uniform across the family."""
-    return _ivf_pair_build(spark, sf_dir)
+    return _score_groups(capped, ["cid"], None, None, "lt").distinct()
 
 
 @register(
@@ -2329,12 +2181,6 @@ def ivf_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cap and observable via dedup_embedding_ivf_probe4_cell_audit.",
 )
 def dedup_embedding_ivf_probe4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivf_pair_build(spark, sf_dir, nprobe=_IVF4_NPROBE, cap=_IVF4_CELL_CAP)
-
-
-def ivf_probe4_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_ivf_probe4 (identical since r12 — see
-    ivf_plan_audit)."""
     return _ivf_pair_build(spark, sf_dir, nprobe=_IVF4_NPROBE, cap=_IVF4_CELL_CAP)
 
 
@@ -2378,7 +2224,7 @@ def _ivf_asym_chain_sql(nprobe: int, seed_rems: tuple[int, ...]) -> str:
     count (and with it the reservation footprint) drops ~T-fold, values
     are branch-for-branch identical (disjoint rem classes ⇒ per-tbl
     ROW_NUMBERs and rankings match the per-branch ones exactly)."""
-    d = _dot_sql("e.embedding", "c.cemb", EMB_DIM, False)
+    d = dot_sql("e.embedding", "c.cemb", EMB_DIM, False)
     vals = ", ".join(f"({i}, {rem})" for i, rem in enumerate(seed_rems))
     return f"""par AS (SELECT {_ivf_k_case('COUNT(*)')} AS k FROM embeddings),
 tbls AS (SELECT * FROM (VALUES {vals}) AS v(tbl, rem)),
@@ -2432,7 +2278,7 @@ WITH {ctes},
 pairs AS (SELECT DISTINCT a_id, b_id FROM ({union})),
 scored AS (
   SELECT p.a_id, p.b_id,
-         {_dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} AS cos_sim
+         {dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} AS cos_sim
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id)
@@ -2457,7 +2303,7 @@ def _ivf_asym_pair_build(
     row_number over all members, rhc = running count of home members —
     identical to the former two-window rnh/rnp pair because vec_id is
     unique within a cell), the role tags explode map-side, and a grouped
-    Arrow kernel (_score_cell_blocks) scores each (tbl, cid) cell's
+    Arrow kernel (_score_groups, rule ``ne``) scores each (tbl, cid) cell's
     probe×home block IN KERNEL, reusing the window's partitioning —
     candidate pairs exist only as numpy matrix entries, never as rows.
     Only the thresholded SURVIVORS (~0.2% yield) reach the final
@@ -2500,7 +2346,7 @@ def _ivf_asym_pair_build(
     tagged = ranked.select(
         "tbl",
         "cid",
-        F.col("vec_id").alias("vid"),
+        "vec_id",
         "embedding",
         F.explode(
             F.array_compact(
@@ -2514,7 +2360,9 @@ def _ivf_asym_pair_build(
     # collapse cross-direction / cross-cell / cross-table duplicates on the
     # thresholded survivor set (cos_sim deterministic per pair → 3-column
     # distinct == (a_id, b_id) distinct)
-    return _score_cell_blocks(tagged).distinct()
+    return _score_groups(
+        tagged, ["tbl", "cid"], ("role", 1), ("role", 0), "ne"
+    ).distinct()
 
 
 def _ivf_member_rows_multi(
@@ -2524,7 +2372,8 @@ def _ivf_member_rows_multi(
     seed_rems: tuple[int, ...],
 ) -> DataFrame:
     """(vec_id, embedding, tbl, cid, pr) member rows for EVERY centroid
-    table in ONE corpus scan — the multi-table twin of _ivf_member_rows.
+    table in ONE corpus scan; the symmetric arms pass the one table
+    (_IVF_SEED_REM,) and keep (vec_id, embedding, cid).
     The kernel emits one Arrow row per vector: the embedding plus a FLAT
     primitive cid list (per-table top-nprobe rankings concatenated in
     seed_rems order — no per-row Python dict building, no T·P-fold
@@ -2602,60 +2451,6 @@ def _ivf_member_rows_multi(
     )
 
 
-def _score_cell_blocks(tagged: DataFrame) -> DataFrame:
-    """Grouped exact scorer: tagged = (vid, tbl, cid, role, embedding)
-    rows, role 0 = home / 1 = probe; one group per (tbl, cid) cell scores
-    its probe×home dot block in numpy and emits only the thresholded,
-    orientation-normalized survivors. The per-pair dot keeps the oracle's
-    dimension order (acc[i,j] folds ((0.0+t1)+t2)+… — same bit-exactness
-    argument as _score_bucket_blocks); self-pairs are
-    masked in kernel (the oracle's p.vec_id <> h.vec_id). Arrow traffic is
-    the group rows themselves — bounded by the candidacy caps — never the
-    pair mass."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("a_id", LongType()),
-            StructField("b_id", LongType()),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-    threshold = _EMB_COS_THRESHOLD
-
-    def score(pdf):
-        hm = pdf[pdf["role"] == 0]
-        pm = pdf[pdf["role"] == 1]
-        if len(hm) == 0 or len(pm) == 0:
-            return pd.DataFrame(
-                {
-                    "a_id": np.array([], dtype=np.int64),
-                    "b_id": np.array([], dtype=np.int64),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
-            )
-        P = np.array(list(pm["embedding"]), dtype=np.float64)
-        H = np.array(list(hm["embedding"]), dtype=np.float64)
-        acc = np.zeros((P.shape[0], H.shape[0]))
-        for d in range(P.shape[1]):
-            acc += P[:, d : d + 1] * H[:, d][None, :]
-        pv = pm["vid"].to_numpy(dtype=np.int64)
-        hv = hm["vid"].to_numpy(dtype=np.int64)
-        mask = (acc >= threshold) & (pv[:, None] != hv[None, :])
-        pi, hi = np.nonzero(mask)
-        return pd.DataFrame(
-            {
-                "a_id": np.minimum(pv[pi], hv[hi]),
-                "b_id": np.maximum(pv[pi], hv[hi]),
-                "cos_sim": acc[pi, hi],
-            }
-        )
-
-    return tagged.groupBy("tbl", "cid").applyInPandas(score, schema)
-
-
 # Registered multi-table dials: the measured 60k design grid
 # (SCALING_r10_ivfasym.md) compared three ways to spend candidate mass —
 # deeper single-table probing (P=32: recall 0.386 at 56M ordered rows),
@@ -2699,13 +2494,6 @@ _IVFMT_PROBE_CAP = _IVFA_HOME_CAP * _IVFMT_NPROBE  # 768 = 2x the P·occ band
     "exceeded the local disk budget at 600k).",
 )
 def dedup_embedding_ivf_mt4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivf_asym_pair_build(
-        spark, sf_dir, nprobe=_IVFMT_NPROBE, seed_rems=_IVFMT_REMS
-    )
-
-
-def ivf_mt4_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan twin of dedup_embedding_ivf_mt4."""
     return _ivf_asym_pair_build(
         spark, sf_dir, nprobe=_IVFMT_NPROBE, seed_rems=_IVFMT_REMS
     )
@@ -2918,11 +2706,11 @@ ivf AS MATERIALIZED (
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id
-  WHERE {_dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}),
+  WHERE {dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}),
 ex AS MATERIALIZED (
   SELECT a.vec_id AS a_id, b.vec_id AS b_id
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD})
+  WHERE {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD})
 SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM ex) AS n_exact,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM ivf) AS n_ivf,
        CAST(COUNT(*) AS BIGINT) AS n_hit,
@@ -3015,11 +2803,11 @@ ivf AS MATERIALIZED (
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id
-  WHERE {_dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}),
+  WHERE {dot_sql('ea.embedding', 'eb.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD}),
 ex AS MATERIALIZED (
   SELECT a.vec_id AS a_id, b.vec_id AS b_id
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {_dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD})
+  WHERE {dot_sql('a.embedding', 'b.embedding', EMB_DIM, False)} >= {_EMB_COS_THRESHOLD})
 SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM ex) AS n_exact,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM ivf) AS n_ivf,
        CAST(COUNT(*) AS BIGINT) AS n_hit,
@@ -3085,13 +2873,6 @@ _IVFMT12_REMS = (3, 1, 5, 7, 9, 11, 0, 2, 4, 6, 8, 10)
     "Measured through this registered query: SCALING_r11_ivfmt12.md.",
 )
 def dedup_embedding_ivf_mt12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivf_asym_pair_build(
-        spark, sf_dir, nprobe=_IVFMT_NPROBE, seed_rems=_IVFMT12_REMS
-    )
-
-
-def ivf_mt12_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint plan twin of dedup_embedding_ivf_mt12."""
     return _ivf_asym_pair_build(
         spark, sf_dir, nprobe=_IVFMT_NPROBE, seed_rems=_IVFMT12_REMS
     )
@@ -3165,7 +2946,7 @@ def _emb_inc_oracle_sql() -> str:
     for t in range(len(_EMB_LSH_OFFSETS)):
         joins.append(
             f"""SELECT n.vec_id AS new_id, o.vec_id AS old_id,
-       {_dot_sql('n.embedding', 'o.embedding', EMB_DIM, False)} AS cos_sim
+       {dot_sql('n.embedding', 'o.embedding', EMB_DIM, False)} AS cos_sim
   FROM (SELECT bk.vec_id, bk.embedding, xor(bk.k{t}, pm.m) AS pk
           FROM newb bk LEFT JOIN occ{t} ON bk.k{t} = occ{t}.key, pm
          WHERE pm.m = 0 OR bk.bits <= 5 OR COALESCE(occ{t}.c, 0) <= {_EMB_PROBE_OCC_BOUND}) n
@@ -3209,18 +2990,10 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _incremental_lsh_build(spark, sf_dir)
 
 
-def incremental_lsh_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan twin of dedup_embedding_incremental — identical to the
-    registered plan since the r13 grouped-scorer build removed the
-    checkpoint (single consumer chain); kept so the gates' override table
-    stays uniform (the 1-row bits crossJoin stays visible either way)."""
-    return _incremental_lsh_build(spark, sf_dir)
-
-
 def _incremental_lsh_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r13 grouped-scorer shape of the asymmetric ingest probe (the
     _adaptive_lsh_build transplant with home/probe roles instead of the
-    i<j triangle — the mt4 _score_cell_blocks analogy). One linear
+    i<j triangle — _score_groups' ``any`` rule). One linear
     pipeline; the 4 per-table corpus-occupancy groupBys + 4 LEFT joins
     that gated the batch side are replaced by ONE (tbl, key) window over
     old+new rows together: corpus occupancy = windowed count of old-row
@@ -3307,7 +3080,7 @@ def _incremental_lsh_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e"),
     ).select("vec_id", "embedding", "tbl", "e.pk", "e.pr")
     return (
-        _score_bucket_blocks(rows, symmetric=False)
+        _score_groups(rows, ["tbl", "pk"], ("pr", 0), ("pr", 1), "any")
         .distinct()
         .select(
             F.col("a_id").alias("new_id"), F.col("b_id").alias("old_id"), "cos_sim"
@@ -3330,8 +3103,6 @@ def _adapt_signature_rows(
     row — the r13 grouped-scorer builds carry the embedding from the scan
     (guide §8: heavy bytes move with their decision rows, exactly once per
     emission) while the audit path stays narrow."""
-    from pg2parquet_spark.operators.similarity import bucket_expr_offset_n
-
     from pg2parquet_spark.tables import spread_scan
 
     emb = table(spark, sf_dir, "embeddings")
@@ -3483,7 +3254,7 @@ def _adaptive_lsh_build(
     )
     # 3-column distinct == (a_id, b_id) distinct (deterministic cos_sim);
     # collapses cross-table/probe duplicates like the oracle's DISTINCT
-    return _score_bucket_blocks(rows, symmetric=True).distinct()
+    return _score_groups(rows, ["tbl", "pk"], None, ("pr", 1), "lt").distinct()
 
 
 # ------------------------------------------- end-to-end curation pipeline --

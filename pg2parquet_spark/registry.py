@@ -81,11 +81,6 @@ def _verified_rounds(root) -> tuple[dict[str, int], dict[str, int]]:
     return last, first
 
 
-def _last_verified_round(root) -> dict[str, int]:
-    """Back-compat shim: the newest-green map only."""
-    return _verified_rounds(root)[0]
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module (registration side effect) and return the registry.
 

@@ -266,7 +266,9 @@ def test_exact_pair_kernel_bit_identical_to_hof_form(spark, tmp_path):
     near-threshold vectors, by running BOTH forms in one session and
     requiring the identical (a_id, b_id, cos_sim) row set bit-for-bit
     (cos_sim compared by repr; the >= threshold mask must also agree, so
-    pair-set equality IS part of the assertion)."""
+    pair-set equality IS part of the assertion). The grouped scorer
+    (_score_groups) runs the same fold and is held to the same standard
+    under each of its pair rules."""
     import struct
 
     from pyspark.sql import functions as F
@@ -319,3 +321,57 @@ def test_exact_pair_kernel_bit_identical_to_hof_form(spark, tmp_path):
     assert len(kernel) > 0, "threshold never crossed — vacuous comparison"
     for k in kernel:
         assert kernel[k] == hof[k], (k, kernel[k], hof[k])
+
+    # the grouped scorer shares the fold: score the same corpus as ONE
+    # group under each pair rule and compare, row for row with duplicates
+    # kept, against the dot_col join under the matching predicate
+    from pg2parquet_spark.operators.dedup import _score_groups
+
+    a_id, b_id = F.col("a_id"), F.col("b_id")
+
+    def hof_rows(left, right, cond, normalize):
+        j = left.crossJoin(right) if cond is None else left.join(right, cond)
+        lo, hi = a_id, b_id
+        if normalize:
+            lo, hi = F.least(a_id, b_id), F.greatest(a_id, b_id)
+        return sorted(
+            (r.a_id, r.b_id, repr(r.cos_sim))
+            for r in j.select(
+                lo.alias("a_id"),
+                hi.alias("b_id"),
+                dot_col("a_emb", "b_emb").alias("cos_sim"),
+            )
+            .filter(F.col("cos_sim") >= _EMB_COS_THRESHOLD)
+            .collect()
+        )
+
+    g = emb.select("vec_id", "embedding", F.lit(0).alias("g"))
+    # ne: every vector probes (role 1) and two thirds are homes (role 0),
+    # so self-pairs occur and must be masked; any: odd ids probe (pr 0),
+    # even ids are members (pr 1)
+    tagged = g.withColumn("role", F.lit(1)).unionByName(
+        g.filter(F.col("vec_id") % 3 != 0).withColumn("role", F.lit(0))
+    )
+    split = g.withColumn("pr", (F.col("vec_id") % 2 == 0).cast("int"))
+    cases = {
+        "lt": (g, None, None, hof_rows(a, b, a_id < b_id, False)),
+        "ne": (
+            tagged,
+            ("role", 1),
+            ("role", 0),
+            hof_rows(a, b.filter(b_id % 3 != 0), a_id != b_id, True),
+        ),
+        "any": (
+            split,
+            ("pr", 0),
+            ("pr", 1),
+            hof_rows(a.filter(a_id % 2 == 1), b.filter(b_id % 2 == 0), None, False),
+        ),
+    }
+    for rule, (rows, left, right, want) in cases.items():
+        got = sorted(
+            (r.a_id, r.b_id, repr(r.cos_sim))
+            for r in _score_groups(rows, ["g"], left, right, rule).collect()
+        )
+        assert len(want) > 0, f"{rule}: threshold never crossed — vacuous comparison"
+        assert got == want, (rule, got, want)

@@ -6,8 +6,7 @@ evidence (spark_optimization_guide §1: measure first, pin the plan shape).
 
 Usage: python tools/benchplans.py <tag> [--round=rNN] [extra_query ...]
   tag = before | after; extra queries are dumped in addition to the
-  headline set. Queries whose registered plan is checkpoint-truncated also
-  get their full pre-checkpoint twin as <query>.pre_checkpoint_<tag>.txt.
+  headline set.
 """
 
 from __future__ import annotations
@@ -66,16 +65,9 @@ def main() -> None:
             f.write(text)
         print(f"wrote {path} ({len(text.splitlines())} lines)")
 
-    # checkpoint-truncated queries: also dump the full pre-checkpoint twin
-    from tests.test_plans import _plan_audit_overrides
-
-    overrides = _plan_audit_overrides()
     for name in HEADLINE + extra:
-        if name not in registry:
-            continue
-        dump(name, registry[name].fn(spark, sf_dir))
-        if name in overrides:
-            dump(f"{name}.pre_checkpoint", overrides[name](spark, sf_dir))
+        if name in registry:
+            dump(name, registry[name].fn(spark, sf_dir))
 
 
 if __name__ == "__main__":
